@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .functions.vector import dot, norm, vec_sql
+
 
 def word_count(df: DataFrame, text_col: str, delimiter: str = " ") -> DataFrame:
     """The canonical MR job [MR04 §2.1]: (word, count) per distinct token."""
@@ -147,21 +149,13 @@ def knn_topk(
 ) -> DataFrame:
     """Exact top-k by cosine against one query vector: the vector ships as
     a literal (broadcast), the scan is shuffle-free, and the top-k is
-    TakeOrderedAndProject — linear in corpus size at any scale."""
-    import math
-
-    q = F.lit([float(x) for x in query]).cast("array<double>")
-    acc = 0.0
-    for x in query:
-        acc += float(x) * float(x)
-    v = F.col(vec_col).cast("array<double>")
-    dot = F.aggregate(
-        F.zip_with(v, q, lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x
+    TakeOrderedAndProject — linear in corpus size at any scale. A
+    FAST_DIM-long query's unrolled norm is all constants, folded to one
+    double at planning."""
+    q = vec_sql(query)
+    sim = F.expr(
+        f"({dot(vec_col, q)}) / (({norm(vec_col)}) * ({norm(q, unroll=True)}))"
     )
-    nrm = F.sqrt(
-        F.aggregate(F.transform(v, lambda a: a * a), F.lit(0.0), lambda s, x: s + x)
-    )
-    sim = dot / (nrm * F.lit(math.sqrt(acc)))
     return (
         df.select(F.col(id_col).alias("id"), sim.alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc("id"))

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vector import dot
 from ..registry import query
 from ..sources.loader import Tables
 
@@ -240,11 +241,6 @@ def scalar_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity operators build on (north-star multimodal columns)."""
     e = Tables(spark, sf_dir).embeddings
     emb = F.col("embedding")
-    sq = F.transform(emb, lambda x: x.cast("double") * x.cast("double"))
-    dot_rev = F.zip_with(
-        emb, F.reverse(emb), lambda x, y: x.cast("double") * y.cast("double")
-    )
-    fold = lambda arr: F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)  # noqa: E731
     return e.select(
         "vec_id",
         F.size(emb).cast("long").alias("dim"),
@@ -256,8 +252,10 @@ def scalar_array(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias(n)
             for i, n in enumerate(["s4_a", "s4_b", "s4_c", "s4_d"])
         ],
-        F.round(fold(sq), 6).alias("norm_sq"),
-        F.round(fold(dot_rev), 6).alias("dot_reversed"),
+        F.expr(f"round({dot('embedding', 'embedding')}, 6)").alias("norm_sq"),
+        F.expr(f"round({dot('embedding', 'reverse(embedding)')}, 6)").alias(
+            "dot_reversed"
+        ),
     )
 
 

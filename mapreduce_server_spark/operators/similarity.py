@@ -26,13 +26,11 @@ from ..functions.vector import (
     DUCK_DOT,
     DUCK_NORM,
     cosine,
-    cosine_cols_sql,
-    cosine_lit_sql,
     dot,
-    dot_cols_sql,
-    dot_lit_sql,
     l2sq_int_lit_sql,
     norm,
+    sq_l2,
+    vec_sql,
 )
 from ..registry import query
 from ..sources.loader import Tables, fan_out_scan
@@ -93,19 +91,10 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-10 by cosine vs one query vector: the vector is fetched
     once driver-side and inlined as a literal (broadcast to all tasks);
     scan + TakeOrderedAndProject, no shuffle of the corpus."""
-    import math
-
     e = Tables(spark, sf_dir).embeddings
     qv = _query_vector(spark, sf_dir)
     if qv is None:  # no query row → oracle's q CTE empties the query
         return spark.createDataFrame([], "vec_id bigint, cos_sim double")
-    q = F.lit(qv).cast("array<float>")
-    # query norm precomputed driver-side with the same sequential double
-    # fold the oracle uses (bit-identical), saving one O(dim) fold per row
-    acc = 0.0
-    for x in qv:
-        acc += float(x) * float(x)
-    q_norm = math.sqrt(acc)
     # round-13: this key deliberately keeps the INTERPRETED fold, not
     # the FAST_DIM unrolled path (bit-identical either way). The
     # serving path re-collects a memoized no-shuffle plan, and each
@@ -115,15 +104,17 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold vs 0.23+ s unrolled, 3 alternations; r12 FULLBENCH 0.076 s
     # fold vs r13's 0.126 s unrolled corroborates). The heavy
     # million-pair consumers (ml_knn_label, knn_join_lsh...) keep the
-    # fast path where it pays 3-11x.
-    from ..functions.vector import _dot_fold, _norm_fold
-
-    sim = _dot_fold(F.col("embedding"), q) / (
-        _norm_fold(F.col("embedding")) * F.lit(q_norm)
+    # fast path where it pays 3-11x. The query's own norm is unrolled:
+    # over a literal that is all constants, folded to one double at
+    # planning, so no row pays an O(dim) fold for it.
+    q = vec_sql(qv)
+    sim = F.expr(
+        f"round(({dot('embedding', q)}) / "
+        f"(({norm('embedding')}) * ({norm(q, unroll=True)})), 6)"
     )
     return (
         e.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", F.round(sim, 6).alias("cos_sim"))
+        .select("vec_id", sim.alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
     )
@@ -201,7 +192,7 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "nbr_id",
             F.expr(
-                f"round({dot_cols_sql('emb_a', 'emb_b', unroll=True)}, 6)"
+                f"round({dot('emb_a', 'emb_b', unroll=True)}, 6)"
             ).alias("score"),
         )
     )
@@ -218,12 +209,11 @@ def _bucket_expr(col_sql: str):
     with the static ±1 hyperplanes (pure function of the vector — the
     exact expression the generated oracles replay). Takes the column as
     SQL text and builds the whole bucket as ONE server-side-parsed
-    expression (round 14 — the py4j node-by-node construction of
-    literal-plane dots was measured at ~1 s of driver time PER PLANE on
-    every fresh plan build; vector.dot_lit_sql docstring)."""
+    expression; the planes are stacked literal distances, so they fold
+    (functions/vector.py)."""
     return F.expr(
         " + ".join(
-            f"(CASE WHEN ({dot_lit_sql(col_sql, _hyperplane(p))}) >= 0"
+            f"(CASE WHEN ({dot(col_sql, vec_sql(_hyperplane(p)))}) >= 0"
             f" THEN {1 << p} ELSE 0 END)"
             for p in range(N_PLANES)
         )
@@ -306,7 +296,7 @@ def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "bucket",
-            F.expr(f"round({cosine_lit_sql('embedding', qv)}, 6)").alias(
+            F.expr(f"round({cosine('embedding', vec_sql(qv))}, 6)").alias(
                 "cos_sim"
             ),
         )
@@ -356,8 +346,6 @@ def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal record assembly: text features ⋈ vector features in one
     frame (north-star multimodal columns; ids align 1:1 per FIXTURES.md)."""
     t = Tables(spark, sf_dir)
-    from ..functions.vector import norm
-
     return (
         t.documents.join(t.embeddings, F.col("doc_id") == F.col("vec_id"))
         .select(
@@ -365,7 +353,9 @@ def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
             "label",
-            F.round(norm(F.col("embedding")), 6).alias("emb_norm"),
+            F.expr(f"round({norm('embedding', unroll=True)}, 6)").alias(
+                "emb_norm"
+            ),
         )
     )
 
@@ -406,15 +396,6 @@ def _l2sq_int(micro_col_sql: str, centroid: list[int]):
     return F.expr(l2sq_int_lit_sql(micro_col_sql, centroid))
 
 
-def _assign_cluster(micro_col_sql: str, centroids: list[list[int]]):
-    """argmin over exact integer centroid distances, ties to the lowest
-    cluster id. Operates on a MATERIALIZED micro-unit column (callers
-    project ``_micro(...)`` once, rather than re-quantizing per
-    centroid)."""
-    dists = F.array(*[_l2sq_int(micro_col_sql, c) for c in centroids])
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]] | None:
     """K coarse centroids IN INTEGER MICRO-UNITS: stride-spaced seeds
     over vec_id order, refined with IVF_ITERS Lloyd rounds — trained
@@ -437,7 +418,7 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]] | None:
     ``_micro``-quantized vectors in PURE int64 — squared distances are
     exact order-free integer sums, the Lloyd mean rounds half-up via
     the integer identity (2·Σ + n) // (2n), and np.argmin ties resolve
-    to the lowest cluster id, matching both _assign_cluster's
+    to the lowest cluster id, matching both _cell_assign_cols'
     array_position rule and the oracle's ORDER BY d, cid. Every step
     is therefore a pure integer function of the data that DuckDB
     replays bit-for-bit (the _IVF_ORACLE unrolled CTEs) — knn_ivf /
@@ -727,7 +708,6 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "vec_id bigint, cluster int, cos_sim double"
         )
     probes = _probe_cells(cents, qv)
-    q = F.lit(qv).cast("array<float>")
     return (
         _ivf_assigned(spark, sf_dir, cents)
         .filter(F.col("vec_id") != QUERY_VEC_ID)
@@ -735,7 +715,9 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "cluster",
-            F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
+            F.expr(
+                f"round({cosine('embedding', vec_sql(qv), unroll=True)}, 6)"
+            ).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
@@ -864,7 +846,6 @@ def knn_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     probes = _probe_cells(cents, qv)
     out = _ivf_index(spark, sf_dir, cents)  # written once per session
-    q = F.lit(qv).cast("array<float>")
     back = spark.read.schema(_IVF_INDEX_SCHEMA).parquet(out)
     return (
         back.filter(F.col("cluster").isin(probes))
@@ -872,7 +853,9 @@ def knn_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.col("cluster").cast("int").alias("cluster"),
-            F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
+            F.expr(
+                f"round({cosine('embedding', vec_sql(qv), unroll=True)}, 6)"
+            ).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
@@ -887,9 +870,8 @@ SEMDEDUP_T = 0.3
 
 
 def _cell_assign_cols(micro_col_sql: str, cents: list[list[int]]):
-    """(cluster, sqdist-to-own-centroid) from the exact integer
-    distances — the struct-min twin of :func:`_assign_cluster` for
-    operators that also need the winning distance. Takes the name of a
+    """(cluster, sqdist-to-own-centroid): argmin over the exact integer
+    centroid distances, ties to the lowest cluster id. Takes the name of a
     MATERIALIZED micro-unit column (round 14): quantize once per row in
     a separate projection, not once per centroid inside the distance
     expressions."""
@@ -1136,8 +1118,8 @@ def knn_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("nrm_b"),
         F.col("csim").alias("csim_b"),
     )
-    pair_cos = dot(F.col("emb_a"), F.col("emb_b")) / (
-        F.col("nrm_a") * F.col("nrm_b")
+    pair_cos = F.expr(
+        f"({dot('emb_a', 'emb_b', unroll=True)}) / (nrm_a * nrm_b)"
     )
     # per qualifying pair the member LARGER in the (csim, vec_id) total
     # order is dropped — ≡ the oracle's EXISTS-a-smaller-neighbor rule
@@ -1189,16 +1171,15 @@ def _join_bucket_exprs(col_sql: str):
     [t*PLANES_PER_TABLE, (t+1)*PLANES_PER_TABLE) — independent codes
     from one shared deterministic plane family. Takes the column as SQL
     text: each table's bucket is ONE server-side-parsed expression
-    (round 14 — 32 py4j-built literal-plane dots cost 28-32 s of driver
-    time per fresh knn_join_lsh build; vector.dot_lit_sql docstring).
-    Bit-identical to the old F.when/dot chain by the dot_lit_sql pin."""
+    whose 4 stacked plane distances fold (functions/vector.py)."""
     out = []
     for t in range(N_TABLES):
         out.append(
             F.expr(
                 " + ".join(
-                    f"(CASE WHEN ({dot_lit_sql(col_sql, _hyperplane(t * PLANES_PER_TABLE + j))}) >= 0"
-                    f" THEN {1 << j} ELSE 0 END)"
+                    f"(CASE WHEN "
+                    f"({dot(col_sql, vec_sql(_hyperplane(t * PLANES_PER_TABLE + j)))})"
+                    f" >= 0 THEN {1 << j} ELSE 0 END)"
                     for j in range(PLANES_PER_TABLE)
                 )
             )
@@ -1316,7 +1297,7 @@ def knn_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "nbr_id",
             F.expr(
-                f"round({dot_cols_sql('emb_a', 'emb_b', unroll=True)}, 6)"
+                f"round({dot('emb_a', 'emb_b', unroll=True)}, 6)"
             ).alias("score"),
         )
     )
@@ -1398,15 +1379,9 @@ def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def subdist(s: int) -> F.Column:
-        a = F.slice(F.col("embedding"), s * _PQ_DIM + 1, _PQ_DIM)
-        b = F.slice(F.col("cv"), s * _PQ_DIM + 1, _PQ_DIM)
-        diff2 = F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        )
-        return F.aggregate(diff2, F.lit(0.0), lambda acc, v: acc + v)
+        a = f"slice(embedding, {s * _PQ_DIM + 1}, {_PQ_DIM})"
+        b = f"slice(cv, {s * _PQ_DIM + 1}, {_PQ_DIM})"
+        return F.expr(sq_l2(a, b))
 
     pairs = e.crossJoin(F.broadcast(c)).select(
         "vec_id",
@@ -1565,12 +1540,7 @@ def ml_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda s: s.getField("c"),
         ).alias("cv")
     )
-    diff2 = F.zip_with(
-        F.col("embedding"),
-        F.col("cv"),
-        lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-    )
-    dist = F.sqrt(F.aggregate(diff2, F.lit(0.0), lambda acc, v: acc + v))
+    dist = F.expr(f"sqrt({sq_l2('embedding', 'cv')})")
     d = e.crossJoin(F.broadcast(carr)).select(
         "vec_id", "label", "clabel", dist.alias("dist")
     )
@@ -1647,31 +1617,6 @@ MMR_CAND = 10  # relevance candidates entering the greedy stage
 MMR_LAMBDA = 0.5  # relevance vs diversity trade-off
 
 
-def _round6(x: float) -> float:
-    """Driver-side replica of Spark's ``round(double, 6)``: Java
-    ``BigDecimal.valueOf(x)`` parses ``Double.toString(x)`` — the
-    shortest decimal rendering, which is exactly Python ``repr`` — then
-    ``setScale(6, HALF_UP)`` (ties away from zero). Using Python's
-    builtin ``round`` here would be WRONG twice over (banker's
-    rounding, and on the binary value rather than the shortest decimal
-    rendering).
-
-    Round 14: no operator depends on this anymore (knn_mmr's greedy now
-    selects among Spark-computed rounded values), which closes the
-    JDK-version caveat — pre-JDK-19 ``Double.toString`` may emit a
-    non-shortest rendering on rare values (JDK-4511638), so repr parity
-    is only observed-JVM-guaranteed. Retained as the tested reference
-    (tests/test_r13_optimizations.py) for any future driver-side
-    rounding need."""
-    import decimal
-
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal("1E-6"), rounding=decimal.ROUND_HALF_UP
-        )
-    )
-
-
 @query("knn_mmr", category="J.sim", oracle=_mmr_oracle())
 def knn_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance — DIVERSIFIED top-k retrieval, the
@@ -1706,7 +1651,7 @@ def knn_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # server-side-parsed cosine (round 14: the py4j-built cosine cost
     # ~2-3 s of driver time per fresh build; bit-identical fold form)
-    rel = F.expr(f"round({cosine_lit_sql('embedding', qv)}, 6)")
+    rel = F.expr(f"round({cosine('embedding', vec_sql(qv))}, 6)")
     cand = (
         e.filter(F.col("vec_id") != QUERY_VEC_ID)
         .select("vec_id", "embedding", rel.alias("rel"))
@@ -1716,7 +1661,7 @@ def knn_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a, b = cand.alias("a"), cand.alias("b")
     sim6 = F.expr(
-        f"round({cosine_cols_sql('a.embedding', 'b.embedding')}, 6)"
+        f"round({cosine('a.embedding', 'b.embedding')}, 6)"
     )
     # round-14 hardening (VERDICT r13 #8): the candidate mmr for ANY
     # chosen set is round(λ·rel_c − (1−λ)·max_sim, 6) where max_sim is
@@ -1724,7 +1669,7 @@ def knn_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ever emit is precomputed here, IN SPARK, per (c, s) pair. The
     # driver then only compares and selects engine-computed doubles;
     # no driver-side rounding remains, which removes the JDK-dependent
-    # repr ≡ Double.toString assumption _round6 documented.
+    # assumption that Python repr ≡ Java Double.toString.
     pairs = (
         a.join(b, F.col("a.vec_id") != F.col("b.vec_id"))
         .select(
@@ -1875,8 +1820,6 @@ def rank_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rankings order on 6-dp-ROUNDED scores with id tiebreaks before
     ranks are assigned, so every rank — hence the whole fusion — is
     deterministic (the argmax-determinism recipe)."""
-    import math
-
     from .text import text_bm25
 
     lex_base = text_bm25(spark, sf_dir)
@@ -1893,20 +1836,14 @@ def rank_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # guard empties only this leg, not the whole operator
         sem = spark.createDataFrame([], "doc_id bigint, sem_rank bigint")
     else:
-        acc = 0.0
-        for x in qv:
-            acc += float(x) * float(x)
-        q_norm = math.sqrt(acc)
-        q = F.lit(qv).cast("array<float>")
-        sim = dot(F.col("embedding"), q) / (
-            norm(F.col("embedding")) * F.lit(q_norm)
-        )
+        # the literal query's unrolled norm folds to one double at planning
+        sim = cosine("embedding", vec_sql(qv), unroll=True)
         ws = Window.orderBy(F.col("cos_sim").desc(), F.col("doc_id"))
         sem = (
             e.filter(F.col("vec_id") != QUERY_VEC_ID)
             .select(
                 F.col("vec_id").alias("doc_id"),
-                F.round(sim, 6).alias("cos_sim"),
+                F.expr(f"round({sim}, 6)").alias("cos_sim"),
             )
             .select(
                 "doc_id",
@@ -2132,7 +2069,6 @@ def knn_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     probes = _probe_cells(cents, qv, nprobe=FILTER_NPROBE)
     out = _ivf_index(spark, sf_dir, cents)  # written once per session
-    q = F.lit(qv).cast("array<float>")
     return (
         spark.read.schema(_IVF_INDEX_SCHEMA)
         .parquet(out)
@@ -2145,7 +2081,9 @@ def knn_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             F.col("cluster").cast("int").alias("cluster"),
-            F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
+            F.expr(
+                f"round({cosine('embedding', vec_sql(qv), unroll=True)}, 6)"
+            ).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)

@@ -12,6 +12,10 @@ Three frozen invariants:
    ``crossJoin`` in the package broadcasts a scalar-agg or constant
    frame; a new BNLJ on an unaudited key fails (it is how a
    non-equi join on two LARGE tables would sneak in).
+
+Vector math has one family: every Column-built ``zip_with`` site is
+pinned, and ``FAST_DIM`` (the guarded unroll) appears only in
+functions/vector.py.
 """
 
 from __future__ import annotations
@@ -74,7 +78,7 @@ def _code_occurrences(path: str, needle: str) -> int:
     return "".join(parts).replace(" ", "").count(needle)
 
 
-def _pinned_sites(needle: str, allowlist: dict[str, int], label: str) -> None:
+def _code_sites(needle: str) -> dict[str, int]:
     found: dict[str, int] = {}
     for root, _dirs, files in os.walk(PKG):
         for f in files:
@@ -84,6 +88,11 @@ def _pinned_sites(needle: str, allowlist: dict[str, int], label: str) -> None:
             n = _code_occurrences(path, needle)
             if n:
                 found[os.path.relpath(path, PKG)] = n
+    return found
+
+
+def _pinned_sites(needle: str, allowlist: dict[str, int], label: str) -> None:
+    found = _code_sites(needle)
     assert found == allowlist, (
         f"new/changed driver-side {label} site(s) — audit that each is "
         f"bounded, then re-pin: {found}"
@@ -96,6 +105,28 @@ def test_collect_sites_are_pinned():
 
 def test_topandas_sites_are_pinned():
     _pinned_sites(".toPandas()", TOPANDAS_ALLOWLIST, ".toPandas()")
+
+
+#: audited Column-built ``zip_with`` sites, path → CODE occurrence count.
+#: Dot products, norms, cosines and squared L2 distances are built only
+#: as SQL text by functions/vector.py (its SQL strings are not code
+#: tokens). Each site here is other element-wise math: emb_quantize's
+#: dequantization error, ml_pca_deflate's ``x - t·v`` and ts_dtw's L1.
+#: A new site is a possible hand-rolled distance: use the vector
+#: builders, or audit it and re-pin.
+ZIP_WITH_ALLOWLIST = {
+    "operators/similarity.py": 1,
+    "operators/stats_ml.py": 2,
+}
+
+
+def test_zip_with_sites_are_pinned():
+    _pinned_sites("zip_with(", ZIP_WITH_ALLOWLIST, "zip_with(")
+
+
+def test_fast_dim_only_in_vector_builders():
+    # the guarded unroll has one implementation (functions/vector.py)
+    assert set(_code_sites("FAST_DIM")) == {"functions/vector.py"}
 
 
 #: audited `.cache()` sites, path → CODE occurrence count (tokenize-

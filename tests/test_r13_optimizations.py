@@ -7,33 +7,25 @@ formulation it replaced:
 - ``fan_out_scan`` (sources/loader.py): conditional round-robin
   repartition — no-op when the scan already splits, multiset-identical
   when it fans out.
-- ``functions/vector.py`` dot/norm + stats_ml ``_sq_dist``: the
-  FAST_DIM unrolled codegen path must be BIT-identical to the
-  interpreted fold it shadows (same ops, same order, same signed
-  zeros), including the NULL and wrong-length fallbacks.
+- ``functions/vector.py`` dot/norm/sq_l2/cosine: the FAST_DIM
+  unrolled codegen path must be BIT-identical to the interpreted fold
+  it shadows (same ops, same order, same signed zeros), over column
+  pairs and literal operands, including the NULL and wrong-length
+  fallbacks.
 - ``dedup_exact``: the struct-min aggregate must reproduce the old
   two-window survivor plan row for row (including the NULL-text group).
-- ``knn_mmr._round6``: the driver-side replica of Spark's
-  ``round(double, 6)`` must match the engine on ties, negatives and
-  binary-noise reprs (the greedy stage moved driver-side this round).
 """
 
 from __future__ import annotations
+
+import struct
 
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from mapreduce_server_spark.functions.vector import (
-    FAST_DIM,
-    _dot_fold,
-    _norm_fold,
-    dot,
-    norm,
-)
+from mapreduce_server_spark.functions import vector
 from mapreduce_server_spark.operators.dedup import dedup_exact
-from mapreduce_server_spark.operators.similarity import _round6
-from mapreduce_server_spark.operators.stats_ml import _sq_dist
 from mapreduce_server_spark.sources.loader import Tables, fan_out_scan
 
 from .conftest import SF001
@@ -61,74 +53,72 @@ def test_fan_out_scan_noop_when_already_split(spark):
     assert fan_out_scan(wider, spark) is wider
 
 
+#: the builders under test, each over operands (a, b) given as SQL text
+BUILDERS = {
+    "dot": vector.dot,
+    "norm": lambda a, b, **kw: vector.norm(a, **kw),
+    "sq_l2": vector.sq_l2,
+    "cosine": vector.cosine,
+}
+
+
 @pytest.fixture(scope="module")
-def emb_pairs(spark):
-    """Adjacent-row 64-dim embedding pairs from the committed fixture —
-    real float32 payloads, deterministic order."""
+def inputs(spark):
+    """Operand sets, each a frame plus the SQL text of two operands:
+
+    - ``pairs``: adjacent-row 64-dim embedding pairs from the committed
+      fixture — real float32 payloads;
+    - ``literal``: every embedding against a literal vector (the first
+      embedding, as the query-vector operators inline it);
+    - ``fallback``: a wrong length, a NULL array and a NULL element,
+      which must all take the fold's result (a value, NULL, NULL);
+    - ``fallback_literal``: the same rows against a literal that is not
+      FAST_DIM long, which the builders fold without a guard.
+    """
     e = Tables(spark, SF001).embeddings.select("vec_id", "embedding")
     a = e.select(F.col("vec_id").alias("ka"), F.col("embedding").alias("ea"))
-    b = e.select(
-        (F.col("vec_id") - 1).alias("ka"), F.col("embedding").alias("eb")
-    )
-    return a.join(b, "ka").cache()
-
-
-def _bits(col):
-    # shortest-decimal rendering distinguishes -0.0 from 0.0 and every
-    # distinct double from its neighbours — a bit-identity proxy that
-    # stays inside the engine
-    return col.cast("string")
-
-
-def test_dot_fast_path_bit_identical_to_fold(emb_pairs):
-    q = emb_pairs.select(
-        _bits(dot(F.col("ea"), F.col("eb"))).alias("fast"),
-        _bits(_dot_fold(F.col("ea"), F.col("eb"))).alias("fold"),
-    )
-    assert q.where(~F.col("fast").eqNullSafe(F.col("fold"))).count() == 0
-
-
-def test_norm_fast_path_bit_identical_to_fold(emb_pairs):
-    q = emb_pairs.select(
-        _bits(norm(F.col("ea"))).alias("fast"),
-        _bits(_norm_fold(F.col("ea"))).alias("fold"),
-    )
-    assert q.where(~F.col("fast").eqNullSafe(F.col("fold"))).count() == 0
-
-
-def test_sq_dist_fast_path_bit_identical_to_fold(emb_pairs):
-    fold = F.aggregate(
-        F.zip_with(
-            F.col("ea"), F.col("eb"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
-    q = emb_pairs.select(
-        _bits(_sq_dist(F.col("ea"), F.col("eb"))).alias("fast"),
-        _bits(fold).alias("fold"),
-    )
-    assert q.where(~F.col("fast").eqNullSafe(F.col("fold"))).count() == 0
-
-
-def test_fast_path_fallbacks(spark):
-    # wrong length -> general fold; NULL array / NULL element -> NULL
-    # exactly like the fold the fast path shadows
-    df = spark.createDataFrame(
+    b = e.select((F.col("vec_id") - 1).alias("ka"), F.col("embedding").alias("eb"))
+    first = e.orderBy("vec_id").first()["embedding"]
+    dim = vector.FAST_DIM
+    odd = spark.createDataFrame(
         [
             ([1.0] * 32, [2.0] * 32),  # not FAST_DIM
-            (None, [2.0] * FAST_DIM),  # NULL side
-            ([1.0] * FAST_DIM, [None] + [2.0] * (FAST_DIM - 1)),  # NULL elt
+            (None, [2.0] * dim),  # NULL side
+            ([None] + [1.0] * (dim - 1), [2.0] * dim),  # NULL element
         ],
-        "a: array<double>, b: array<double>",
+        "ea: array<double>, eb: array<double>",
     )
-    got = df.select(
-        dot(F.col("a"), F.col("b")).alias("d"),
-        _dot_fold(F.col("a"), F.col("b")).alias("f"),
+    return {
+        "pairs": (a.join(b, "ka"), "ea", "eb"),
+        "literal": (e, "embedding", vector.vec_sql(first)),
+        "fallback": (odd, "ea", "eb"),
+        "fallback_literal": (odd, "ea", vector.vec_sql([2.0] * 32)),
+    }
+
+
+@pytest.mark.parametrize(
+    "inp", ["pairs", "literal", "fallback", "fallback_literal"]
+)
+@pytest.mark.parametrize("fn", sorted(BUILDERS))
+def test_unroll_bit_identical_to_fold(inputs, fn, inp):
+    """The guarded FAST_DIM unroll performs the fold's double ops in the
+    fold's order, so every result has the same bits (struct-packed,
+    which tells -0.0 from 0.0), and the NULL cases stay NULL."""
+    df, a, b = inputs[inp]
+    build = BUILDERS[fn]
+    rows = df.select(
+        F.expr(build(a, b, unroll=True)).alias("fast"),
+        F.expr(build(a, b)).alias("fold"),
     ).collect()
-    assert got[0].d == got[0].f == 64.0  # 32 * (1*2)
-    assert got[1].d is None and got[1].f is None
-    assert got[2].d is None and got[2].f is None
+    assert rows
+    for r in rows:
+        if r.fold is None:
+            assert r.fast is None
+        else:
+            assert struct.pack("d", r.fast) == struct.pack("d", r.fold)
+    if inp.startswith("fallback"):
+        assert rows[0].fold is not None
+        assert rows[1].fold is None and rows[2].fold is None
 
 
 def test_dedup_exact_matches_old_window_formulation(spark):
@@ -155,23 +145,3 @@ def test_dedup_exact_matches_old_window_formulation(spark):
         )
         assert len(nulls) == 1
         assert nulls[0].n_copies == n_null_docs
-
-
-def test_round6_matches_spark_round(spark):
-    vals = [
-        0.1234565,  # 6-dp tie (half-up, toward +inf for positives)
-        -0.1234565,  # negative tie (HALF_UP = away from zero)
-        1.0000005,
-        0.30000000000000004,  # binary-noise repr (0.1 + 0.2)
-        0.1 + 0.2 - 0.3,  # 5.551115123125783e-17
-        123456.789012345,
-        -9.9999995e-1,
-        0.0,
-        -0.0,
-        2.5e-7,
-        1e-30,
-    ]
-    df = spark.createDataFrame([(v,) for v in vals], "x: double")
-    got = df.select(F.round(F.col("x"), 6).alias("r")).collect()
-    for v, row in zip(vals, got):
-        assert _round6(v) == row.r, (v, _round6(v), row.r)
